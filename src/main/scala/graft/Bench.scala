@@ -18,19 +18,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // 64m: the ~15MB ngram prefix self-join sits at the default 10MB
-      // AQE broadcast edge and flaps between broadcast and SMJ plans
-      // (measured 2.6s vs 10s run-to-run); plenty of driver room here
-      .config("spark.sql.autoBroadcastJoinThreshold", String.valueOf(64L * 1024 * 1024))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.forMain("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     val failed = scala.collection.mutable.LinkedHashSet[String]()

@@ -10,7 +10,7 @@ import graft.functions._
   * functions so `spark.sql` users can call cosine/simhash/minhash/
   * jaccard/shingles directly. Two entry points:
   *
-  *  - `GraftExtensions` for `SparkSession.builder.withExtensions` /
+  *  - `GraftExtensions` for `withExtensions` (every [[GraftSession]]) /
   *    `spark.sql.extensions=graft.GraftExtensions` (plan-time injection)
   *  - `GraftFunctions.register(spark)` for an existing session.
   */

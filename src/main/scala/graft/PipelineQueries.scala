@@ -737,7 +737,6 @@ object PipelineQueries {
     // spark.sql route reaches the native merge operator (same oracle).
     "q_asof_tvf" -> { (s, dir) =>
       import s.implicits._
-      GraftFunctions.register(s)
       Tables(s, dir, "events").select($"event_id", $"user_id", $"ts")
         .createOrReplaceTempView("asof_events_v")
       Tables(s, dir, "orders")
@@ -754,7 +753,6 @@ object PipelineQueries {
     // the SQL route must reach the identical binned operator plan.
     "q_range_tvf" -> { (s, dir) =>
       import s.implicits._
-      GraftFunctions.register(s)
       val orders = Tables(s, dir, "orders")
       orders.select($"o_orderkey".as("p_orderkey"),
         $"o_custkey".as("user_id"),

@@ -20,8 +20,9 @@ object Tables {
 
   /** events.ts was once parquet TIMESTAMP(NANOS), which Spark 4 cannot
     * read as a timestamp. Sessions must set
-    * `spark.sql.legacy.parquet.nanosAsLong=true` AT BUILD TIME (all
-    * entry points — Verify/Bench/ExplainAudit/cli.Main/SparkSpec — do);
+    * `spark.sql.legacy.parquet.nanosAsLong=true` AT BUILD TIME (every
+    * entry point and the test suite builds through [[GraftSession]],
+    * which does);
     * the raw-nanos Long that read produces is truncated to micros by
     * normalize(). The conf is deliberately NOT set here: a reader
     * mutating session conf is a global side effect hiding in a helper,

@@ -1,7 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.config.ConfigLoader
 import graft.model._
 import graft.run.Migrator
@@ -40,16 +39,9 @@ object Main {
     def flag(k: String): Boolean =
       cfg.get(k).exists(v => Set("true", "1", "yes").contains(v.toLowerCase))
 
-    val spark = SparkSession.builder()
-      .master(cfg.getOrElse("master", "local[*]"))
-      .appName("graft-migrate")
-      .config("spark.sql.shuffle.partitions",
-        cfg.getOrElse("shuffle_partitions", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-migrate",
+      cfg.getOrElse("master", "local[*]"),
+      cfg.getOrElse("shuffle_partitions", "32"))
     spark.sparkContext.setLogLevel(
       cfg.getOrElse("log_level", "WARN").toUpperCase match {
         case "WARNING" => "WARN" // reference cli.py:62 spells it WARNING

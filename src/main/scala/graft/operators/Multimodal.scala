@@ -228,8 +228,8 @@ object Multimodal {
     writePhashIndexSigs(perceptualSig(media), table, buckets, bands)
 
   /** [[writePhashIndex]] from an already-computed (media_id, phash)
-    * frame — the seam KernelScaleBench uses to measure the index
-    * machinery at 100M signatures without staging 100M payloads.
+    * frame — the seam for measuring the index machinery at 100M
+    * signatures without staging 100M payloads.
     * `kernel` names the signature function the sigs came from; probes
     * declaring a different kernel are refused (an asset-level probe
     * against a frame-level index shares the key SHAPE but none of the
@@ -329,7 +329,7 @@ object Multimodal {
       bands, maxKeyLiterals)
 
   /** [[probePhashIndex]] from an already-computed (media_id, phash)
-    * batch frame (the KernelScaleBench seam, and the reuse path when a
+    * batch frame (the measurement seam, and the reuse path when a
     * caller already holds signatures). */
   private[graft] def probePhashIndexSigs(spark: SparkSession,
       table: String, batchSigs: DataFrame, maxDist: Int,

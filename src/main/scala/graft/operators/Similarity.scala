@@ -544,12 +544,13 @@ object Similarity {
     // downstream cosine-verify stage — the r16 kernel variant collapsed
     // the 4M-candidate verify onto the probe scan's partition count
     // (2.1 s → 2.9 s warm). Re-attempted in r17 per the VERDICT with an
-    // explicit repartition restoring the width (graft.KnnAB, same-JVM
-    // 3-way A/B at 32c): exchange 2.0–2.7 s vs kernel+repartition(qid)
-    // 3.3–3.6 s vs kernel+repartition(defaultParallelism, qid)
-    // 3.3–3.8 s — the explicit exchange costs the same as the rank
-    // exchange it replaces while losing the aggregate's output
-    // statistics, so the exchange path stays.
+    // explicit repartition restoring the width (a same-JVM 3-way A/B at
+    // 32c, recorded in OPTIMIZATION_r17.md): exchange 2.0–2.7 s vs
+    // kernel+repartition(qid) 3.3–3.6 s vs
+    // kernel+repartition(defaultParallelism, qid) 3.3–3.8 s — the
+    // explicit exchange costs the same as the rank exchange it replaces
+    // while losing the aggregate's output statistics, so the exchange
+    // path stays.
     val q = probes.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
     val cellScores = q.crossJoin(broadcast(centroids))
       .select(col("qid"), col("cell").as("id"),

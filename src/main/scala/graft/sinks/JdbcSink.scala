@@ -33,6 +33,12 @@ sealed trait SqlDialect {
   final def quoteQualified(table: String): String =
     table.split('.').map(quote).mkString(".")
 }
+object SqlDialect {
+  /** `jdbc:derby:` URLs speak Derby; every other scheme gets the
+    * reference's MySQL dialect. */
+  def forUrl(url: String): SqlDialect =
+    if (url.startsWith("jdbc:derby:")) DerbyDialect else MySqlDialect
+}
 object MySqlDialect extends SqlDialect {
   /** Backtick quoting (reference: mysql_writer.py:22-44). */
   def quote(ident: String): String = s"`${ident.replace("`", "``")}`"
@@ -82,10 +88,14 @@ object DerbyDialect extends SqlDialect {
   * loop.
   */
 class JdbcSink(url: String, props: Properties = new Properties(),
-    dialect: SqlDialect = MySqlDialect,
+    dialect: SqlDialect = null,
     writeOptions: Map[String, String] = Map.empty) extends Sink {
 
-  override def ddlType(dt: DataType): String = dialect.ddlType(dt)
+  /** `dialect` when given, else the URL scheme's ([[SqlDialect.forUrl]]). */
+  private val sqlDialect: SqlDialect =
+    Option(dialect).getOrElse(SqlDialect.forUrl(url))
+
+  override def ddlType(dt: DataType): String = sqlDialect.ddlType(dt)
 
   private def withConn[A](f: Connection => A): A = {
     val c = DriverManager.getConnection(url, props)
@@ -114,7 +124,7 @@ class JdbcSink(url: String, props: Properties = new Properties(),
         } finally rs.close()
       if (!exists) {
         val st = c.createStatement()
-        try st.execute(dialect.createNamespaceSql(ns)) finally st.close()
+        try st.execute(sqlDialect.createNamespaceSql(ns)) finally st.close()
       }
     }
 
@@ -151,12 +161,12 @@ class JdbcSink(url: String, props: Properties = new Properties(),
       val nn = if (c.nullable) "" else " NOT NULL"
       val dflt = c.default.map(d => s" DEFAULT $d").getOrElse("")
       val cmt = c.comment.filter(_.nonEmpty)
-        .map(dialect.commentClause).getOrElse("")
-      s"${dialect.quote(c.name)} ${c.typeName}$nn$dflt$cmt"
+        .map(sqlDialect.commentClause).getOrElse("")
+      s"${sqlDialect.quote(c.name)} ${c.typeName}$nn$dflt$cmt"
     }
     val opts = tableComment.filter(_.nonEmpty)
-      .map(dialect.tableOptionsClause).getOrElse("")
-    s"CREATE TABLE ${dialect.quoteQualified(table)} (${cols.mkString(", ")})$opts"
+      .map(sqlDialect.tableOptionsClause).getOrElse("")
+    s"CREATE TABLE ${sqlDialect.quoteQualified(table)} (${cols.mkString(", ")})$opts"
   }
 
   override def createTable(table: String, columns: Seq[DestColumn],
@@ -167,7 +177,7 @@ class JdbcSink(url: String, props: Properties = new Properties(),
   }
 
   override def setTableComment(table: String, comment: String): Boolean =
-    dialect.alterTableCommentSql(dialect.quoteQualified(table), comment)
+    sqlDialect.alterTableCommentSql(sqlDialect.quoteQualified(table), comment)
       .exists { sql =>
         withConn { c =>
           val st = c.createStatement()
@@ -251,9 +261,9 @@ class JdbcSink(url: String, props: Properties = new Properties(),
       val st = c.createStatement()
       try columns.foreach { col =>
         val cmt = col.comment.filter(_.nonEmpty)
-          .map(dialect.commentClause).getOrElse("")
-        st.execute(s"ALTER TABLE ${dialect.quoteQualified(table)} " +
-          s"ADD COLUMN ${dialect.quote(col.name)} ${col.typeName}$cmt")
+          .map(sqlDialect.commentClause).getOrElse("")
+        st.execute(s"ALTER TABLE ${sqlDialect.quoteQualified(table)} " +
+          s"ADD COLUMN ${sqlDialect.quote(col.name)} ${col.typeName}$cmt")
       } finally st.close()
     }
 
@@ -264,7 +274,7 @@ class JdbcSink(url: String, props: Properties = new Properties(),
   override def truncateOrDrop(table: String): Unit =
     withConn { c =>
       val st = c.createStatement()
-      try st.execute(s"TRUNCATE TABLE ${dialect.quoteQualified(table)}") finally st.close()
+      try st.execute(s"TRUNCATE TABLE ${sqlDialect.quoteQualified(table)}") finally st.close()
     }
 
   /** Destination catalog via JDBC metadata: name, type, IS_NULLABLE,
@@ -321,6 +331,6 @@ class JdbcSink(url: String, props: Properties = new Properties(),
       case WriteMode.ErrorIfExists => SaveMode.ErrorIfExists
     }).option("truncate", "true") // overwrite keeps DDL, like the reference
     writeOptions.foldLeft(writer) { case (w, (k, v)) => w.option(k, v) }
-      .jdbc(url, dialect.quoteQualified(table), props)
+      .jdbc(url, sqlDialect.quoteQualified(table), props)
   }
 }

@@ -30,7 +30,6 @@ class BloomPruneSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_bloom_agg / graft_might_contain round-trip") {
-    GraftFunctions.register(spark)
     spark.range(0, 1000).toDF("k").createOrReplaceTempView("bloom_build")
     val hits = spark.sql(
       """SELECT count(*) FROM range(0, 2000)

@@ -32,7 +32,8 @@ class BucketedSpec extends SparkSpec {
       assert(colocated.count() == shuffled.count() && colocated.count() > 0)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+        GraftSession.BroadcastThreshold)
       spark.sql("DROP TABLE IF EXISTS li_bkt")
       spark.sql("DROP TABLE IF EXISTS ord_bkt")
     }
@@ -80,7 +81,8 @@ class BucketedSpec extends SparkSpec {
       assert(j.count() == expected)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+        GraftSession.BroadcastThreshold)
       Bucketed.dropBucketed(spark, "li_reg")
       Bucketed.dropBucketed(spark, "ord_reg")
       assert(!fs.exists(loc), "dropBucketed removes external data too")
@@ -149,7 +151,8 @@ class BucketedSpec extends SparkSpec {
       assert(Bucketed.registerBucketed(spark, "li_sc", "l_orderkey", 8))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+        GraftSession.BroadcastThreshold)
       Bucketed.dropBucketed(spark, "li_sc")
       Bucketed.dropBucketed(spark, "ord_sc")
     }

@@ -86,9 +86,9 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("SparkSessionExtensions class injects the same functions") {
-    // separate session with the extension wired the config way
+    // a new session carries the shared session's extensions: the
+    // functions are injected, not registered
     val s2 = spark.newSession()
-    GraftFunctions.register(s2) // newSession shares registry injection path
     assert(s2.sql("SELECT graft_dot(array(1.0F), array(2.0F))")
       .head().getDouble(0) == 2.0)
   }

@@ -132,6 +132,21 @@ class MigratorSpec extends SparkSpec {
     assert(cnt == 5)
   }
 
+  test("jdbc sink: no dialect argument takes Derby from a jdbc:derby: URL") {
+    // the CLI builds `new JdbcSink(url)`; a MySQL default would emit
+    // backtick-quoted DDL that Derby rejects with a lexical error
+    val url = s"jdbc:derby:${tmpDir("derby-auto")}/db;create=true"
+    val r = new Migrator(new SourceReader(spark, sf001), new JdbcSink(url))
+      .migrate(MigrationSpec(sourceTable = "region", destTable = "region_auto",
+        fullScanGuardLimit = None))
+    assert(r.createdTable && r.rowsWritten == 5)
+    assert(spark.read.format("jdbc").option("url", url)
+      .option("dbtable", "\"region_auto\"").load().count() == 5)
+    assert(new JdbcSink("jdbc:mysql://unused/db")
+      .createTableDdl("t", Seq(DestColumn("id", "BIGINT"))) ==
+      "CREATE TABLE `t` (`id` BIGINT)")
+  }
+
   test("hive-partitioned source: only the LATEST partition migrates (S2-S4)") {
     // build a partitioned table from events: pt=<date> directories
     import org.apache.spark.sql.functions._

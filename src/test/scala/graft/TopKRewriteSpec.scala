@@ -24,85 +24,71 @@ class TopKRewriteSpec extends SparkSpec {
     df.withColumn("rn", row_number().over(w)).filter($"rn" <= k)
   }
 
+  /** Plans `f` with the rule excluded: the plain-window reference. */
+  private def withoutRewrite[A](f: => A): A = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "graft.plans.TopKWindowRewrite")
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("rewrite fires: no Window in the optimized plan, agg instead") {
-    GraftFunctions.register(spark)
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.TopKWindowRewrite)
-    try {
-      val q = windowTopK(scored, 5)
-      val opt = q.queryExecution.optimizedPlan.toString
-      assert(!opt.contains("Window "),
-        s"Window survived the rewrite:\n$opt")
-      assert(opt.contains("topkbyscore") || opt.contains("TopKByScore") ||
-        opt.contains("__topk"), s"no TopK aggregate in plan:\n$opt")
-    } finally spark.experimental.extraOptimizations = Nil
+    val q = windowTopK(scored, 5)
+    val opt = q.queryExecution.optimizedPlan.toString
+    assert(!opt.contains("Window "),
+      s"Window survived the rewrite:\n$opt")
+    assert(opt.contains("topkbyscore") || opt.contains("TopKByScore") ||
+      opt.contains("__topk"), s"no TopK aggregate in plan:\n$opt")
   }
 
   test("rewritten result == window result, rows/ranks/ties identical") {
-    val plain = windowTopK(scored, 5).collect().map(_.toSeq).toSet
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.TopKWindowRewrite)
-    try {
-      val rewritten = windowTopK(scored, 5).collect().map(_.toSeq).toSet
-      assert(rewritten == plain && plain.nonEmpty)
-      // rn = 1 (argmax) variant
-      val w = Window.partitionBy($"g").orderBy($"score".desc, $"id".asc)
-      val argmax = scored.withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1).collect().map(_.toSeq).toSet
-      assert(argmax.size == 7)
-    } finally spark.experimental.extraOptimizations = Nil
+    val plain = withoutRewrite {
+      val q = windowTopK(scored, 5)
+      assert(q.queryExecution.optimizedPlan.toString.contains("Window "))
+      q.collect().map(_.toSeq).toSet
+    }
+    val rewritten = windowTopK(scored, 5).collect().map(_.toSeq).toSet
+    assert(rewritten == plain && plain.nonEmpty)
+    // rn = 1 (argmax) variant
+    val w = Window.partitionBy($"g").orderBy($"score".desc, $"id".asc)
+    val argmax = scored.withColumn("rn", row_number().over(w))
+      .filter($"rn" === 1).collect().map(_.toSeq).toSet
+    assert(argmax.size == 7)
   }
 
   test("rule is active through the GraftExtensions injection path") {
-    // a session constructed with withExtensions over the SAME context
-    // (clear the active/default session so the builder doesn't hand
-    // back the shared one) — proves injectOptimizerRule wiring, not
-    // just extraOptimizations. Never stop s2: it shares the context.
-    val S = org.apache.spark.sql.SparkSession
-    S.clearActiveSession(); S.clearDefaultSession()
-    val s2 = S.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      assert(s2 ne spark, "builder returned the shared session")
-      import s2.implicits._
-      val df = (1 to 300).map(i => (i % 3, i.toLong, (i % 17).toDouble))
-        .toDF("g", "id", "score")
-      val w = Window.partitionBy($"g").orderBy($"score".desc, $"id".asc)
-      val q = df.withColumn("rn", row_number().over(w)).filter($"rn" <= 4)
-      assert(!q.queryExecution.optimizedPlan.toString.contains("Window "),
-        "injected rule did not fire:\n" +
-          q.queryExecution.optimizedPlan.toString)
-      assert(q.count() == 12)
-    } finally {
-      S.setActiveSession(spark); S.setDefaultSession(spark)
-    }
+    // the shared session is a GraftSession: the rule arrives through
+    // injectOptimizerRule, with no extraOptimizations set
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    val df = (1 to 300).map(i => (i % 3, i.toLong, (i % 17).toDouble))
+      .toDF("g", "id", "score")
+    val w = Window.partitionBy($"g").orderBy($"score".desc, $"id".asc)
+    val q = df.withColumn("rn", row_number().over(w)).filter($"rn" <= 4)
+    assert(!q.queryExecution.optimizedPlan.toString.contains("Window "),
+      "injected rule did not fire:\n" +
+        q.queryExecution.optimizedPlan.toString)
+    assert(q.count() == 12)
   }
 
   test("guards: nullable inputs, extra columns, other ranks do NOT rewrite") {
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.TopKWindowRewrite)
-    try {
-      // extra column used downstream → no rewrite, still correct
-      val extra = scored.withColumn("payload", $"id" * 2)
-      val w = Window.partitionBy($"g").orderBy($"score".desc, $"id".asc)
-      val q1 = extra.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-      assert(q1.queryExecution.optimizedPlan.toString.contains("Window "))
-      assert(q1.count() == 21)
+    // extra column used downstream → no rewrite, still correct
+    val extra = scored.withColumn("payload", $"id" * 2)
+    val w = Window.partitionBy($"g").orderBy($"score".desc, $"id".asc)
+    val q1 = extra.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 3)
+    assert(q1.queryExecution.optimizedPlan.toString.contains("Window "))
+    assert(q1.count() == 21)
 
-      // nullable score → no rewrite (window ranks nulls, agg drops them)
-      val nullable = scored
-        .withColumn("score", when($"id" % 100 =!= 0, $"score"))
-        .select($"g", $"id", $"score")
-      val q2 = nullable.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-      assert(q2.queryExecution.optimizedPlan.toString.contains("Window "))
+    // nullable score → no rewrite (window ranks nulls, agg drops them)
+    val nullable = scored
+      .withColumn("score", when($"id" % 100 =!= 0, $"score"))
+      .select($"g", $"id", $"score")
+    val q2 = nullable.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 3)
+    assert(q2.queryExecution.optimizedPlan.toString.contains("Window "))
 
-      // rank() instead of row_number → no rewrite
-      val q3 = scored.withColumn("rn", rank().over(w)).filter($"rn" <= 3)
-      assert(q3.queryExecution.optimizedPlan.toString.contains("Window "))
-    } finally spark.experimental.extraOptimizations = Nil
+    // rank() instead of row_number → no rewrite
+    val q3 = scored.withColumn("rn", rank().over(w)).filter($"rn" <= 3)
+    assert(q3.queryExecution.optimizedPlan.toString.contains("Window "))
   }
 }
