@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions
 
@@ -225,9 +226,24 @@ object IvfIndex {
     m
   }
 
-  private def readCentroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(
-      s"${IndexVersions.resolvePath(spark, path)}/centroids")
+  /** The schema every build writes `centroids/` with ([[fitCentroids]]:
+    * `cell INT, centroid ARRAY<FLOAT>`). Reading with it skips the
+    * schema-inference job a bare `spark.read.parquet` schedules. */
+  private val CentroidSchema = StructType(Seq(
+    StructField("cell", IntegerType),
+    StructField("centroid", ArrayType(FloatType))))
+
+  /** The committed generation's centroids as a LOCAL frame: one
+    * fixed-schema scan collected once (≤ nlist ≤ 4096 rows), so
+    * [[centroidMatrix]] and every later collect of it schedule no job.
+    * Shared by [[IvfIndex]] and [[IvfPqIndex]]. */
+  private[operators] def readCentroids(spark: SparkSession,
+      path: String): DataFrame = {
+    val rows = spark.read.schema(CentroidSchema)
+      .parquet(s"${IndexVersions.resolvePath(spark, path)}/centroids")
+      .collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), CentroidSchema)
+  }
 
   /** Derive nlist: caller's value, or the √n occupancy rule (capped at
     * 4096); `knownCount` skips the count job. */
@@ -239,6 +255,15 @@ object IvfIndex {
         else corpus.select(col(idCol)).count()
       math.min(4096, math.max(8, math.sqrt(n.toDouble).toInt))
     }
+
+  /** True for a non-null normalized vector whose components are all
+    * finite. A unit vector's self dot is ≤ 1 unless a component is NaN
+    * or ±Inf (normalizing one of those yields NaN components), so one
+    * codegen'd dot product decides it; Spark orders NaN above +Inf, so
+    * `< +Inf` rejects both. */
+  private[operators] def finiteVec(nvec: Column): Column =
+    nvec.isNotNull &&
+      VectorFunctions.dotProduct(nvec, nvec) < lit(Double.PositiveInfinity)
 
   /** Fit the coarse quantizer on a bounded DETERMINISTIC sample of
     * `c` (id, nvec — see [[write]]'s fitSamplePerCell doc) and return
@@ -257,9 +282,12 @@ object IvfIndex {
     // former MLlib fit was ~2–3 s of fixed job overhead per cold build
     // at sf0.1 and ~94% of the 2M-vector build wall (guide §1.2 / §5
     // driver rules; BASELINE.md round 16).
+    // rows the assignment would drop (null or non-finite vectors) are
+    // not trained on either: one NaN row makes every restart's SSE NaN
+    val usable = c.filter(finiteVec(col("nvec")))
     val trainSet =
-      if (fitSamplePerCell == 0) c
-      else c.orderBy(xxhash64(col("id"))).limit(trainCap)
+      if (fitSamplePerCell == 0) usable
+      else usable.orderBy(xxhash64(col("id"))).limit(trainCap)
     // content-keyed reuse: a compaction's refit trains over the folded
     // layout's OWN files (a new path every generation), so the
     // plan-hash cache can never hit — the content fingerprint does
@@ -396,8 +424,10 @@ object IvfIndex {
     // null vectors: the former crossJoin + rank assignment dropped them
     // at its inner join; the kernel's nullSafeEval would instead emit a
     // null cell, landing the row in the Hive default partition where no
-    // pruned probe can reach it (ADVICE r16) — keep the drop semantics
-    batch.filter(col("nvec").isNotNull)
+    // pruned probe can reach it (ADVICE r16) — keep the drop semantics,
+    // and drop vectors with a NaN/±Inf component the same way (the
+    // kernel would rank every cell NaN and file them under cell 0)
+    batch.filter(finiteVec(col("nvec")))
       .withColumn("cell",
         VectorFunctions.nearestCell(col("nvec"), flat, nlist, dims))
   }
@@ -479,8 +509,9 @@ object IvfIndex {
     val buildMse = requireMeta(spark, path, dims).buildMse
     val b = batch.select(col(idCol).as("id"), col(vecCol).as("vec"),
       Embeddings.normalize(col(vecCol)).as("nvec"))
-    assignWith(b, readCentroids(spark, path))
-      .join(broadcast(readCentroids(spark, path)), Seq("cell"))
+    val centroids = readCentroids(spark, path)
+    assignWith(b, centroids)
+      .join(broadcast(centroids), Seq("cell"))
       .select(sqDist(col("nvec"), col("centroid")).as("d2"))
       .agg(count(lit(1)).as("n"), avg(col("d2")).as("batch_mse"))
       .select(col("n"), lit(buildMse).as("build_mse"), col("batch_mse"),

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions
 
@@ -39,19 +40,24 @@ import graft.functions.VectorFunctions
   *  - TRAINING: coarse centroids via [[IvfIndex.fitCentroids]]
   *    (bounded deterministic sample); the residual codebook via
   *    [[Similarity.Pq.train]] on a bounded hash-ordered sample of
-  *    residuals. Both artifacts are a few KB, broadcast with the plan.
+  *    residuals. Both artifacts are a few KB, broadcast with the plan,
+  *    and are read back with the writer's fixed schema (one job each,
+  *    no schema-inference pass; the centroids as a local frame).
   *  - SEGMENTS (the ingest path): [[append]] folds an arrival batch in
   *    at O(batch) — assign under the FROZEN committed centroids,
   *    encode under the FROZEN committed codebook, write the codes as
   *    `segments/segN/cell=K/`, commit the [[SegmentLog]] manifest.
   *    [[compact]] is a PURE FOLD: base ∪ segments re-written as one
-  *    cell-partitioned base generation with centroids, codebook, and
-  *    every code byte UNCHANGED — compaction here reclaims layout
-  *    (file counts, manifest length), it does not retrain. Retraining
-  *    is an explicit [[write]] REBUILD from the source corpus (the
-  *    index stores no vectors to retrain from — by design), triggered
-  *    when [[drift]]'s frozen-centroid error ratio says the
-  *    distribution moved. Crash windows match [[IvfIndex]] exactly:
+  *    cell-partitioned base generation with every code byte UNCHANGED,
+  *    and the centroids/ and codebook/ files COPIED byte for byte into
+  *    it (never decoded and re-encoded) — compaction here reclaims
+  *    layout (file counts, manifest length), it does not retrain.
+  *    Retraining is an explicit [[write]] REBUILD from the source
+  *    corpus (the index stores no vectors to retrain from — by
+  *    design), triggered when [[drift]]'s frozen-centroid error ratio
+  *    says the distribution moved ([[appendObserved]] returns the same
+  *    numbers, observed on the segment's codes write). Crash windows
+  *    match [[IvfIndex]] exactly:
   *    orphan segment dirs are invisible, manifest rows ≤ `segs_upto`
   *    are ignored, the next mutation heals both.
   *
@@ -162,6 +168,19 @@ object IvfPqIndex {
     finally out.close()
   }
 
+  /** Copy `from` byte for byte to `to`, replacing whatever a crashed
+    * earlier attempt left there (the `mode("overwrite")` contract of
+    * the writes beside it). */
+  private def copyDir(spark: SparkSession, from: String, to: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = new org.apache.hadoop.fs.Path(from)
+    val dst = new org.apache.hadoop.fs.Path(to)
+    val dstFs = dst.getFileSystem(conf)
+    dstFs.delete(dst, true)
+    require(org.apache.hadoop.fs.FileUtil.copy(src.getFileSystem(conf), src,
+      dstFs, dst, false, conf), s"copy $src -> $dst failed")
+  }
+
   /** Full sidecar of the COMMITTED generation — None when the resolved
     * generation has no IVF-PQ sidecar. Kernel mismatch refuses: same
     * layout shape, none of the semantics (the phash-index rule). */
@@ -206,16 +225,17 @@ object IvfPqIndex {
     m
   }
 
-  private def readCentroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(
-      s"${IndexVersions.resolvePath(spark, path)}/centroids")
+  /** The schema [[write]] gives `codebook/` (one row). */
+  private val CodebookSchema =
+    StructType(Seq(StructField("codebook", ArrayType(FloatType))))
 
   /** The committed generation's flat [m][ksub][dsub] codebook — one
-    * bounded driver row. */
+    * bounded driver row, read with the writer's schema (one job, no
+    * schema-inference pass). */
   private def readCodebook(spark: SparkSession, path: String): Seq[Float] =
-    spark.read.parquet(
-        s"${IndexVersions.resolvePath(spark, path)}/codebook")
-      .select(col("codebook")).head().getSeq[Float](0)
+    spark.read.schema(CodebookSchema)
+      .parquet(s"${IndexVersions.resolvePath(spark, path)}/codebook")
+      .head().getSeq[Float](0)
 
   private[graft] def liveSegs(spark: SparkSession,
       path: String): Seq[Long] = {
@@ -228,10 +248,14 @@ object IvfPqIndex {
     * each leg's directory listing. */
   private[graft] def codesView(spark: SparkSession,
       path: String): DataFrame = {
+    // the id type follows the indexed corpus, so the codes schema is
+    // inferred — once, on the base; every segment leg reuses it
     val base = spark.read.parquet(
       s"${IndexVersions.resolvePath(spark, path)}/codes")
+    val schema = base.schema
     liveSegs(spark, path).foldLeft(base) { (acc, n) =>
-      acc.unionByName(spark.read.parquet(SegmentLog.segDir(path, n)))
+      acc.unionByName(
+        spark.read.schema(schema).parquet(SegmentLog.segDir(path, n)))
     }
   }
 
@@ -259,9 +283,22 @@ object IvfPqIndex {
     */
   def append(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      dims: Int = 0, atSeg: Long = -1L): Long = {
+      dims: Int = 0, atSeg: Long = -1L): Long =
+    appendObserved(spark, path, batch, idCol, vecCol, dims, atSeg)._1
+
+  /** [[append]], also returning the batch's [[drift]] row
+    * (n, build_mse, batch_mse, ratio) when a segment was written (None
+    * for -1/-2). n and batch_mse are a `Dataset.observe` on the codes
+    * write itself, placed after the `repartition(cell)` so it runs in
+    * the write's result stage, where Spark applies each task's
+    * accumulator update exactly once (the [[graft.functions.ManifestAgg]]
+    * placement): a recomputed map stage cannot count a row twice, and
+    * no second assignment pass runs. */
+  private[graft] def appendObserved(spark: SparkSession, path: String,
+      batch: DataFrame, idCol: String, vecCol: String, dims: Int,
+      atSeg: Long): (Long, Option[Row]) = {
     val meta = requireMeta(spark, path, dims)
-    if (atSeg >= 0 && atSeg <= meta.segsUpto) return -2L
+    if (atSeg >= 0 && atSeg <= meta.segsUpto) return (-2L, None)
     val committed = SegmentLog.committedSegs(spark, path)
     val live = committed.filter(_ > meta.segsUpto)
     // a pinned retry's own dir must survive the heal only if committed;
@@ -270,11 +307,12 @@ object IvfPqIndex {
     if (live != committed) SegmentLog.commitManifest(spark, path, live)
     val b = batch.select(col(idCol).as("id"),
       Embeddings.normalize(col(vecCol)).as("nvec"))
-    if (b.isEmpty) return -1L
-    val centroids = readCentroids(spark, path)
+    if (b.isEmpty) return (-1L, None)
+    val centroids = IvfIndex.readCentroids(spark, path)
     val cb = readCodebook(spark, path)
     val dsub = meta.dims / meta.m
     val n = if (atSeg >= 0) atSeg else (committed :+ meta.segsUpto).max + 1
+    val tally = org.apache.spark.sql.Observation()
     IvfIndex.assignWith(b.withColumn("vec", col("nvec")), centroids)
       .select(col("id"), col("nvec"), col("cell"))
       .join(broadcast(centroids), Seq("cell"))
@@ -282,18 +320,27 @@ object IvfPqIndex {
       .select(col("id"),
         VectorFunctions.pqEncode(col("res"), cb, meta.m, meta.ksub, dsub)
           .as("codes"),
-        col("cell"))
+        col("cell"),
+        IvfIndex.sqDist(col("nvec"), col("centroid")).as("d2"))
       .repartition(col("cell"))
+      .observe(tally, count(lit(1)).as("n"), avg(col("d2")).as("batch_mse"))
+      .drop("d2")
       .write.partitionBy("cell").mode("overwrite")
       .parquet(SegmentLog.segDir(path, n))
     SegmentLog.commitManifest(spark, path, (live.toSet + n).toSeq.sorted)
-    n
+    val t = tally.get
+    val rows = t("n").asInstanceOf[Long]
+    val ratio = // the ratio rule of [[drift]]
+      if (rows == 0L || meta.buildMse == 0.0) 0.0
+      else t("batch_mse").asInstanceOf[Double] / meta.buildMse
+    (n, Some(Row(rows, meta.buildMse, t("batch_mse"), ratio)))
   }
 
   /** PURE-FOLD compaction: re-write base ∪ live segments as one
-    * cell-partitioned base generation — centroids, codebook, and every
-    * code byte UNCHANGED (the new sidecar carries build_mse forward and
-    * bumps `segs_upto` past every folded segment). Reclaims the
+    * cell-partitioned base generation — every code byte UNCHANGED, the
+    * centroids/ and codebook/ files copied byte for byte (no Spark job),
+    * and the new sidecar carries build_mse forward and bumps
+    * `segs_upto` past every folded segment. Reclaims the
     * segment list and per-segment small files at O(index) IO; it does
     * NOT retrain — the index stores no vectors to retrain from, so a
     * quantizer refresh is an explicit [[write]] rebuild from the
@@ -301,20 +348,17 @@ object IvfPqIndex {
     * heal) keeps every crash window exact, as in [[IvfIndex.compact]].
     * Returns the new base version. */
   def compact(spark: SparkSession, path: String, dims: Int = 0): Int = {
-    import spark.implicits._
     val meta = requireMeta(spark, path, dims)
     val live = liveSegs(spark, path)
     val view = codesView(spark, path)
-    val centroids = readCentroids(spark, path)
-    val cb = readCodebook(spark, path)
+    val from = IndexVersions.resolvePath(spark, path)
     val upto = (live :+ meta.segsUpto).max
     val v = IndexVersions.nextVersion(spark, path)
     val dir = IndexVersions.versionDir(path, v)
     view.repartition(col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/codes")
-    centroids.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    Seq(Tuple1(cb)).toDF("codebook").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
+    copyDir(spark, s"$from/centroids", s"$dir/centroids")
+    copyDir(spark, s"$from/codebook", s"$dir/codebook")
     writeMeta(spark, dir, meta.copy(segsUpto = upto))
     IndexVersions.commit(spark, path, v)
     IndexVersions.dropOldPathVersions(spark, path, keepPrevious = 1): Unit
@@ -344,7 +388,7 @@ object IvfPqIndex {
     val meta = requireMeta(spark, path, dims)
     val dsub = meta.dims / meta.m
     val cb = readCodebook(spark, path)
-    val centroids = readCentroids(spark, path)
+    val centroids = IvfIndex.readCentroids(spark, path)
     val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
       Embeddings.normalize(col(vecCol)).as("qn"))
     // narrow per-query cell ranking — the [[IvfIndex.probe]] kernel
@@ -399,7 +443,7 @@ object IvfPqIndex {
     val buildMse = requireMeta(spark, path, dims).buildMse
     val b = batch.select(col(idCol).as("id"),
       Embeddings.normalize(col(vecCol)).as("nvec"))
-    val centroids = readCentroids(spark, path)
+    val centroids = IvfIndex.readCentroids(spark, path)
     IvfIndex.assignWith(b.withColumn("vec", col("nvec")), centroids)
       .join(broadcast(centroids), Seq("cell"))
       .select(IvfIndex.sqDist(col("nvec"), col("centroid")).as("d2"))

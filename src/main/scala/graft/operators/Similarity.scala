@@ -131,7 +131,9 @@ object Similarity {
     * start can land in a noticeably worse local optimum than MLlib's
     * multi-candidate kmeans|| init did (measured: SemDeDup recall 0.38
     * vs ≥ 0.5 on the 500-vector spec corpus at one restart).
-    * Deterministic for a fixed (sample order, k, seed). */
+    * Deterministic for a fixed (sample order, k, seed). Refuses with an
+    * IllegalArgumentException when no restart ends on a finite SSE
+    * (a NaN/±Inf sample row) instead of returning no centroids. */
   private[graft] def lloyd(sample: Array[Array[Float]], k: Int,
       seed: Long, maxIter: Int = 10, nRedo: Int = 3): Array[Array[Float]] = {
     var best: Array[Array[Float]] = null
@@ -142,6 +144,9 @@ object Similarity {
       if (sse < bestSse) { bestSse = sse; best = cents }
       r += 1
     }
+    require(best != null,
+      "quantizer training sample has no finite k-means fit " +
+        "(a NaN/±Inf component makes every restart's SSE non-finite)")
     best
   }
 

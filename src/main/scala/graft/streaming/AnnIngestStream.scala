@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 
 import graft.operators.IvfPqIndex
 
@@ -18,7 +18,8 @@ import graft.operators.IvfPqIndex
   *  1. records the batch's coarse-quantization DRIFT under the frozen
   *     centroids to `driftDir/batch=<id>/` (one row per batch — the
   *     retrain monitoring trail, written with overwrite so a replay is
-  *     idempotent),
+  *     idempotent). The numbers are observed on the append's own codes
+  *     write, so the batch is assigned to cells once,
   *  2. folds live segments back into the base with the PURE-FOLD
   *     [[IvfPqIndex.compact]] once their count passes
   *     `maxLiveSegments` (probe cost grows with the live-segment list:
@@ -81,26 +82,39 @@ object AnnIngestStream {
     }
   }
 
+  /** Schema of a drift-log row, as [[IvfPqIndex.drift]] types it. */
+  private val DriftSchema = StructType(Seq(
+    StructField("batch_id", LongType, nullable = false),
+    StructField("seg", LongType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("build_mse", DoubleType, nullable = false),
+    StructField("batch_mse", DoubleType),
+    StructField("ratio", DoubleType)))
+
   /** One micro-batch through the maintenance stages — factored out so
     * tests can replay it batch-exactly (including retries). Returns
-    * the drift row it logged. */
+    * the drift row it logged, as a local frame.
+    *
+    * The drift numbers come from the append's own codes write (an
+    * observation in its result stage — see
+    * [[IvfPqIndex.appendObserved]]), so the batch is assigned once;
+    * [[IvfPqIndex.drift]] runs only when the append wrote nothing (an
+    * empty batch, or a retry whose segment a fold already took in). */
   private[graft] def applyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, indexPath: String, base: Long, driftDir: String,
       idCol: String, vecCol: String, maxLiveSegments: Int,
       retrainRatio: Double, rebuildCorpus: Option[DataFrame],
       nlist: Int, fitSamplePerCell: Int): DataFrame = {
-    val seg = IvfPqIndex.append(spark, indexPath, batch,
-      idCol = idCol, vecCol = vecCol, atSeg = base + batchId + 1)
-    val drift = IvfPqIndex.drift(spark, indexPath, batch,
-        idCol = idCol, vecCol = vecCol)
-      .select(lit(batchId).as("batch_id"), lit(seg).as("seg"),
-        col("n"), col("build_mse"), col("batch_mse"), col("ratio"))
-      .localCheckpoint(true)
+    val (seg, observed) = IvfPqIndex.appendObserved(spark, indexPath,
+      batch, idCol, vecCol, dims = 0, atSeg = base + batchId + 1)
+    val d = observed.getOrElse(IvfPqIndex.drift(spark, indexPath, batch,
+      idCol = idCol, vecCol = vecCol).head())
+    val drift = spark.createDataFrame(java.util.List.of(Row(batchId, seg,
+      d.getLong(0), d.getDouble(1), d.get(2), d.get(3))), DriftSchema)
     drift.write.mode("overwrite").parquet(s"$driftDir/batch=$batchId")
     if (IvfPqIndex.liveSegs(spark, indexPath).size > maxLiveSegments)
       IvfPqIndex.compact(spark, indexPath): Unit
-    val ratio = drift.select(col("ratio")).head().getDouble(0)
-    if (ratio > retrainRatio) rebuildCorpus.foreach { corpus =>
+    if (d.getDouble(3) > retrainRatio) rebuildCorpus.foreach { corpus =>
       val meta = IvfPqIndex.metaFull(spark, indexPath).get
       // the rebuild corpus CONTAINS the appended arrivals (it is the
       // table they land in), so the new base must subsume every live

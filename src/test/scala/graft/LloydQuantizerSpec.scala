@@ -35,6 +35,14 @@ class LloydQuantizerSpec extends AnyFunSuite {
     assert(cents.forall(_.length == 2))
   }
 
+  test("a sample with no finite fit is refused, not returned as null") {
+    val sample = blob(Array(0f, 0f), 100, 1.0f, 3L) :+ Array(Float.NaN, 0f)
+    val err = intercept[IllegalArgumentException] {
+      Similarity.lloyd(sample, 4, 42L)
+    }
+    assert(err.getMessage.contains("finite"))
+  }
+
   test("all-identical sample: every centroid lands on the point") {
     val row = Array(1.5f, -2.5f, 0.5f)
     val sample = Array.fill(50)(row.clone())
